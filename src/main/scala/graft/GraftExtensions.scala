@@ -19,6 +19,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // lo <= t AND t <= hi` re-plan through the co-partitioned merge
     // exec (rule rewrites the logical join, strategy plans the node)
     e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
+    // a global sort straight under a round-robin repartition(n > 1) is
+    // thrown away by it; drop the sort and its range exchange
+    e.injectOptimizerRule(_ => graft.plans.DropSortUnderRoundRobin)
     e.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)
     e.injectFunction((
       FunctionIdentifier("vec_dot"),

@@ -43,15 +43,36 @@ object ArabicCorpus {
   /** Full flagship output over the file corpus: per-file word rows
     * (word, word_len, word_truncated, file_path, words_count) — the
     * reference's values_to_load_path row (v2/main.py:290-294).
+    *
+    * [[TextFiles.wholeText]] yields exactly one row per file, so both
+    * per-file aggregates are functions of that row, as in the
+    * reference's one-item transformer chain (v2/main.py:93-204):
+    * `words_count` is the size of the file's token array
+    * (ReduceItemTransformer) and the unique words are its
+    * `array_distinct` (UniqueFilterTransformer). Neither needs a
+    * groupBy, a distinct or a join, so the file tree is scanned and
+    * tokenized once and no aggregate shuffles; the only exchange left
+    * is the final sort's.
     */
   def wordStats(spark: SparkSession, dir: String = SampleDir): DataFrame = {
-    val toks = TextFiles.wholeText(spark, "*.txt", dir)
-      .select(col("file_path"), explode(TextFunctions.arabicTokens(col("content"))).as("word"))
-      .select(col("file_path"), TextFunctions.normalizeWord(col("word")).as("word"))
-      .filter(col("word") =!= "")
-    val counts = toks.groupBy("file_path").agg(count(lit(1)).as("words_count"))
-    toks.distinct()
-      .join(counts, "file_path")
+    val toks = filter(
+      transform(TextFunctions.arabicTokens(col("content")), TextFunctions.normalizeWord(_)),
+      _ =!= "")
+    TextFiles.wholeText(spark, "*.txt", dir)
+      .select(col("file_path"), toks.as("toks"))
+      // both aggregates are taken before the explode: a column computed
+      // next to a generator is evaluated above it, once per output row
+      .select(
+        col("file_path"),
+        // a read file's token array is never NULL; the coalesce only keeps
+        // the column NOT NULL, like the bigint count it replaces
+        coalesce(size(col("toks")).cast("long"), lit(0L)).as("words_count"),
+        array_distinct(col("toks")).as("words"))
+      // explode_outer + a NULL filter, not explode: for a plain explode
+      // Catalyst infers a `size(words) > 0` filter and pushes it below
+      // these projections, which runs the whole tokenizer a second time
+      .select(col("file_path"), col("words_count"), explode_outer(col("words")).as("word"))
+      .filter(col("word").isNotNull)
       .select(
         TextFunctions.truncate255(col("word")).as("word"),
         length(TextFunctions.removeDiacritics(col("word"))).as("word_len"),

@@ -44,6 +44,12 @@ object Sinks {
 
   /** LoadBalanceLoader analog (v2/core/loaders/loadbalancer.py): level
     * the write parallelism, then any sink runs n-wide.
+    *
+    * Row order is not preserved: `repartition(n)` deals rows round-robin.
+    * For `n > 1` a global sort directly under it (`df.orderBy(...)`) is
+    * therefore dropped from the plan by
+    * [[graft.plans.DropSortUnderRoundRobin]]. When the written order
+    * matters, sort inside `sink` (`sortWithinPartitions`) or use `n = 1`.
     */
   def loadBalanced(df: DataFrame, n: Int)(sink: DataFrame => Unit): Unit =
     sink(df.repartition(n))

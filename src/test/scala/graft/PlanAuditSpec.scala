@@ -166,6 +166,23 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("n_chars"))
   }
 
+  test("flagship wordStats: one file scan, one tokenizer, no exchange but the final range sort") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val root = ArabicCorpus.wordStats(spark, WordStatsCorpus.dir).queryExecution.executedPlan
+      val scans = root.collect { case s: FileSourceScanExec => s }
+      assert(scans.size == 1, s"the file tree must be read once, saw ${scans.size} scans:\n$root")
+      assert("regexp_extract_all".r.findAllIn(root.toString).size == 1,
+        s"the tokenizer must run once per file, not again in an inferred filter:\n$root")
+      val exchanges = root.collect { case e: Exchange => e }
+      assert(exchanges.size == 1 && exchanges.head.outputPartitioning.isInstanceOf[RangePartitioning],
+        s"only the output sort may exchange:\n$root")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("minhash-lsh: shingle base hashing happens before the doc aggregate") {
     val p = plan(Dedup.minhashLshPairs(t))
     assert(p.contains("partial_min"), "signature mins must be map-side partial")
